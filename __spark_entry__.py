@@ -83,7 +83,8 @@ def _doc_pairs(spark, sf_dir, mod=7):
     candidates by another factor of ``mod``).  Guide §3.1 "pick the
     join strategy deliberately" / §2.4 — the predicate is unchanged,
     merely visible to the hash join as a key, so the emitted pair set
-    is IDENTICAL (pinned by tests/test_round7_opts.py)."""
+    is IDENTICAL (pinned against the pre-round-7 filter form by
+    tests/test_round7_opts.py::test_doc_pairs_match_pre_r7_form)."""
     d = _t(spark, sf_dir, "documents")
     n_parts = max(spark.sparkContext.defaultParallelism,
                   d.rdd.getNumPartitions())
@@ -725,9 +726,9 @@ def q_score_pairs_jw(spark, sf_dir):
     """The round-5 one-call public API (`fuzzspark.functions
     .score_pairs`): jaro_winkler over customer x supplier name pairs
     plus planted exact-dup rows, cutoff 0.73 — exercises the length
-    prefilter below the UDF, the exact-dup short-circuit (score 1.0
-    without paying the kernel) and the plan-visible cutoff filter in
-    one call."""
+    prefilter below the UDF, the exact-dup shortcut inside the scorer
+    batch (score 1.0 without paying the kernel) and the cutoff filter,
+    all in one scan and one ArrowEvalPython node."""
     from fuzzspark.functions import score_pairs
     p = _name_pairs(spark, sf_dir)
     dups = (p.where(F.col("c_custkey") % 50 == 0)

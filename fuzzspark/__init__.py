@@ -17,3 +17,8 @@ Re-implements the query/data-processing capabilities of rapidfuzz-rs
 """
 
 __version__ = "0.1.0"
+
+from fuzzspark import _worker
+
+if _worker.in_python_worker():
+    _worker.install_zip_cache_guard()

@@ -26,7 +26,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from fuzzspark.functions import length_prefilter, scorer_column
+from fuzzspark.functions import _with_score_not_null, length_prefilter
 
 __all__ = ["fuzzy_topk_join"]
 
@@ -106,10 +106,8 @@ def fuzzy_topk_join(queries: DataFrame, choices: DataFrame, *,
         # JVM-side prune below the UDF: Catalyst fuses it into the join
         cand = cand.where(length_prefilter(F.col("qlen"), F.col("clen"),
                                            scorer, score_cutoff))
-    scored = cand.withColumn(
-        "score", scorer_column(scorer, "q", "c", "normalized_similarity",
-                               score_cutoff=score_cutoff))
-    scored = scored.where(F.col("score").isNotNull())
+    scored = _with_score_not_null(cand, scorer, "q", "c",
+                                  score_cutoff=score_cutoff)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                F.asc("choice_id"))
     return (scored.withColumn("rank", F.row_number().over(w))

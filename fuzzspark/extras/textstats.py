@@ -19,15 +19,6 @@ def token_count_col(text="text"):
             .otherwise(F.size(F.split(F.trim(text), r"\s+")))
 
 
-def bpe_ish_token_count_col(text="text"):
-    """BPE-ish token estimate: word-piece regex split (letters runs,
-    digit runs, single punctuation) — a deterministic proxy for
-    tokenizer cost accounting."""
-    return F.size(F.expr(
-        rf"filter(split({text}, '(?<=[a-zA-Z]{{4}})(?=[a-zA-Z])"
-        rf"|(?<=[0-9])(?=[^0-9])|(?<=[^a-zA-Z0-9\\s])|\\s+'), x -> x != '')"))
-
-
 def quality_cols(text="text"):
     """Standard corpus-quality signals as a dict of columns."""
     length = F.length(text)

@@ -12,6 +12,13 @@ src/distance/jaro.rs:122-131).  Catalyst cannot derive these from a
 black-box UDF, so the pipeline adds them as explicit column predicates
 *below* the UDF — they push down into joins/scans and are the single
 biggest pruning win at scale.
+
+``score_pairs`` scores any pair DataFrame in one scan and one
+ArrowEvalPython node per call: exact-duplicate rows are shortcut inside
+the batch (``batch_scores``), and a cutoff's ``score IS NOT NULL``
+filter stays above the UDF instead of being pushed below it with a
+second copy of the scorer (``_with_score_not_null``, also used by the
+fuzzy top-k join and the streaming matcher).
 """
 
 from __future__ import annotations
@@ -66,9 +73,21 @@ def scorer_udf(scorer: str, form: str = "normalized_similarity", *,
 
 
 @functools.lru_cache(maxsize=None)
-def _cached_udf(scorer, form, score_cutoff, weights, pad, prefix_weight):
-    return scorer_udf(scorer, form, score_cutoff=score_cutoff,
-                      weights=weights, pad=pad, prefix_weight=prefix_weight)
+def _cached_udf(scorer, form, score_cutoff, weights, pad, prefix_weight,
+                deterministic=True):
+    udf = scorer_udf(scorer, form, score_cutoff=score_cutoff,
+                     weights=weights, pad=pad, prefix_weight=prefix_weight)
+    return udf if deterministic else udf.asNondeterministic()
+
+
+def _score_column(scorer, s1, s2, form, deterministic, score_cutoff,
+                  weights, pad, prefix_weight) -> Column:
+    udf = _cached_udf(scorer, form, score_cutoff,
+                      tuple(weights) if weights else None, pad,
+                      prefix_weight, deterministic)
+    c1 = F.col(s1) if isinstance(s1, str) else s1
+    c2 = F.col(s2) if isinstance(s2, str) else s2
+    return udf(c1, c2)
 
 
 def scorer_column(scorer: str, s1: Column | str, s2: Column | str,
@@ -78,11 +97,28 @@ def scorer_column(scorer: str, s1: Column | str, s2: Column | str,
                   score_hint: Optional[float] = None) -> Column:
     """Convenience: a ready-to-select score column."""
     del score_hint  # reference API parity: a perf hint, accepted+ignored
-    udf = _cached_udf(scorer, form, score_cutoff,
-                      tuple(weights) if weights else None, pad, prefix_weight)
-    c1 = F.col(s1) if isinstance(s1, str) else s1
-    c2 = F.col(s2) if isinstance(s2, str) else s2
-    return udf(c1, c2)
+    return _score_column(scorer, s1, s2, form, True, score_cutoff,
+                         weights, pad, prefix_weight)
+
+
+def _with_score_not_null(df, scorer: str, s1: Column | str,
+                         s2: Column | str,
+                         form: str = "normalized_similarity", *,
+                         score_cutoff: Optional[float] = None, weights=None,
+                         pad: bool = False, prefix_weight: float = 0.1,
+                         score_hint: Optional[float] = None):
+    """``df`` plus ``score``, keeping only the rows whose score is not
+    NULL, in ONE ArrowEvalPython node.
+
+    With a deterministic UDF, Catalyst pushes ``score IS NOT NULL``
+    below the projection by inlining the UDF into the filter, and the
+    plan scores every row twice.  This call site uses its own instance
+    marked non-deterministic, which stops that pushdown; the scores it
+    returns are deterministic all the same."""
+    del score_hint  # reference API parity: a perf hint, accepted+ignored
+    score = _score_column(scorer, s1, s2, form, False, score_cutoff,
+                          weights, pad, prefix_weight)
+    return df.withColumn("score", score).where(F.col("score").isNotNull())
 
 
 def length_prefilter(len1: Column, len2: Column, scorer: str,
@@ -157,24 +193,15 @@ def score_pairs(pairs, s1: str, s2: str, *, scorer: str = "ratio",
       UDF (pushes into joins/scans; the reference's kernel-internal
       length prune, src/distance/levenshtein.rs:1045-1047, lifted to
       the plan level),
-    * exact-duplicate rows are split off BEFORE the scorer UDF and
-      unioned back with the perfect score — they genuinely never reach
-      the ArrowEvalPython node (cutoff==0 equality fast path,
-      src/distance/levenshtein.rs:1126-1128, as a plan-level split),
+    * one scan and one ArrowEvalPython node: exact-duplicate rows take
+      the perfect score inside the batch, before the kernels (see
+      :func:`~fuzzspark.kernels.batch.batch_scores`),
     * with a cutoff, suppressed rows are filtered unless
       ``keep_suppressed=True`` keeps them as NULL scores (reference
       Option::None, src/common.rs:33-86).
 
     Extra kwargs (``weights``, ``pad``, ``prefix_weight``) pass through
     to :func:`scorer_column`.
-
-    Determinism requirement (ADVICE r6): the exact/UDF plan split
-    evaluates the input's lineage twice, so ``pairs`` must be
-    DETERMINISTIC — a non-deterministic upstream column (rand, uuid)
-    can land a row in both or neither branch.  persist/localCheckpoint
-    expensive or non-deterministic inputs before calling (the pipeline
-    score stage consumes checkpointed parquet for exactly this
-    reason).
 
         from fuzzspark.functions import score_pairs
         matches = score_pairs(df, "name_a", "name_b",
@@ -192,26 +219,8 @@ def score_pairs(pairs, s1: str, s2: str, *, scorer: str = "ratio",
         df = df.where(length_prefilter(
             F.length(c1), F.length(c2), scorer, score_cutoff,
             prefix_weight=kw.get("prefix_weight", 0.1)))
-    udf_col = scorer_column(scorer, c1, c2, form,
-                            score_cutoff=score_cutoff, **kw)
-    # equal strings score perfectly in every metric; the exact rows are
-    # SPLIT OFF before the UDF and unioned back (ADVICE r5: a when()
-    # branch over the UDF column still evaluates the extracted
-    # ArrowEvalPython node for every row — only a plan-level split
-    # actually skips the kernel, as the pipeline score stage does).
-    # NULL inputs fail the equality (SQL NULL semantics) and take the
-    # scorer path, which returns NULL for them.  The raw-'similarity'
-    # form's perfect value is length/scorer-dependent — no
-    # short-circuit there.
-    perfect = {"distance": F.lit(0.0), "normalized_distance": F.lit(0.0),
-               "normalized_similarity": F.lit(1.0)}.get(form)
-    if perfect is not None:
-        eq = F.coalesce(c1 == c2, F.lit(False))
-        exact = df.where(eq).withColumn("score", perfect)
-        out = (df.where(~eq).withColumn("score", udf_col)
-               .unionByName(exact))
-    else:
-        out = df.withColumn("score", udf_col)
     if score_cutoff is not None and not keep_suppressed:
-        out = out.where(F.col("score").isNotNull())
-    return out
+        return _with_score_not_null(df, scorer, c1, c2, form,
+                                    score_cutoff=score_cutoff, **kw)
+    return df.withColumn("score", scorer_column(
+        scorer, c1, c2, form, score_cutoff=score_cutoff, **kw))

@@ -345,13 +345,6 @@ def native_banded(kind: str, pat_strs: list[str], txt_strs: list[str],
     return out if rc == 0 else None
 
 
-def native_lev_hinted(pat_strs: list[str], txt_strs: list[str],
-                      hint, bounds: np.ndarray | None = None
-                      ) -> np.ndarray | None:
-    """Back-compat alias for native_banded('levenshtein', ...)."""
-    return native_banded("levenshtein", pat_strs, txt_strs, hint, bounds)
-
-
 def native_partial_lcs(pat_strs: list[str], txt_strs: list[str]
                        ) -> np.ndarray | None:
     """max LCS of pat against any equal-length window of txt (pat must

@@ -843,10 +843,17 @@ def batch_scores(scorer: str, form: str, s1_arr, s2_arr, *,
         # this is exactly result-preserving.
         valid = valid & ~_length_hopeless(scorer, form, s1, s2, score_cutoff,
                                           weights, prefix_weight=prefix_weight)
-    raw, valid = _raw_batch(scorer, s1, s2, valid, weights=weights, pad=pad,
-                            prefix_weight=prefix_weight, errors=errors,
-                            form=form, score_cutoff=score_cutoff,
-                            score_hint=hint)
+    # exact-duplicate shortcut (cutoff==0 equality fast path,
+    # src/distance/levenshtein.rs:1126-1128): equal strings score the
+    # perfect raw value under every scorer, so they skip the kernels and
+    # rejoin below for the shared normalization and cutoff
+    eq = valid & (np.array(s1, dtype=object) == np.array(s2, dtype=object))
+    raw, valid = _raw_batch(scorer, s1, s2, valid & ~eq, weights=weights,
+                            pad=pad, prefix_weight=prefix_weight,
+                            errors=errors, form=form,
+                            score_cutoff=score_cutoff, score_hint=hint)
+    raw[eq] = 1.0 if scorer in _SIM_CANONICAL else 0.0
+    valid |= eq
     out = np.full(n, np.nan)
     idx = np.flatnonzero(valid)
     if len(idx) == 0:

@@ -237,16 +237,6 @@ def jaro_winkler_similarity_raw(s1: str, s2: str, prefix_weight: float = 0.1) ->
     return sim
 
 
-def prefix_similarity_raw(s1: str, s2: str) -> int:
-    """src/distance/prefix.rs:47-69."""
-    return common_prefix_len(s1, s2)
-
-
-def postfix_similarity_raw(s1: str, s2: str) -> int:
-    """src/distance/postfix.rs:47-69."""
-    return common_suffix_len(s1, s2)
-
-
 def _max_len(len1: int, len2: int) -> int:
     return max(len1, len2)
 

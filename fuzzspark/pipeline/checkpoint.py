@@ -17,10 +17,11 @@ import hashlib
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 __all__ = ["StageRunner", "params_hash"]
 
@@ -32,19 +33,9 @@ def params_hash(params: dict) -> str:
         json.dumps(params, sort_keys=True, default=str).encode()).hexdigest()[:16]
 
 
-def _score_histogram(df: DataFrame, col: str, bins: int = 20):
-    """Fallback scan-based histogram (the hot path rides the write job
-    via Observation — see StageRunner.run)."""
-    binned = (df.where(F.col(col).isNotNull())
-              .select(F.least(F.lit(bins - 1),
-                              F.floor(F.col(col) * bins).cast("int")).alias("b"))
-              .groupBy("b").count().orderBy("b").collect())
-    return {int(r["b"]): int(r["count"]) for r in binned}
-
-
 def _histogram_aggs(col: str, bins: int = 20):
-    """Observation aggregates equivalent to _score_histogram: NULL
-    scores excluded, bucket = min(bins-1, floor(score*bins))."""
+    """Observation aggregates for the score histogram: NULL scores
+    excluded, bucket = min(bins-1, floor(score*bins))."""
     bucket = F.least(F.lit(bins - 1), F.floor(F.col(col) * bins).cast("int"))
     return [F.sum((F.col(col).isNotNull() & (bucket == b)).cast("long"))
             .alias(f"b{b}") for b in range(bins)]
@@ -107,26 +98,18 @@ class StageRunner:
         # a second full pass over every stage's output — at 100 TB the
         # post-write re-scan is the same size as the write itself.
         bins = 20
-        metrics = None
-        try:
-            from pyspark.sql import Observation
-            import uuid
-            aggs = [F.count(F.lit(1)).alias("rows")]
-            if score_col is not None:
-                aggs += _histogram_aggs(score_col, bins)
-            obs = Observation(f"lineage_{stage}_{uuid.uuid4().hex[:8]}")
-            df = df.observe(obs, *aggs)
-            self._write(df, out_dir)
-            metrics = obs.get
-        except ImportError:  # pragma: no cover — very old pyspark
-            self._write(df, out_dir)
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if score_col is not None:
+            aggs += _histogram_aggs(score_col, bins)
+        obs = Observation(f"lineage_{stage}_{uuid.uuid4().hex[:8]}")
+        self._write(df.observe(obs, *aggs), out_dir)
+        metrics = obs.get
         persisted = self._read(out_dir)
         partition_rows, rows_kind = self._partition_rows(out_dir, persisted)
         manifest = {
             "stage": stage,
             "params_hash": params_hash(self.params),
-            "row_count": (int(metrics["rows"]) if metrics is not None
-                          else int(sum(partition_rows.values()))),
+            "row_count": int(metrics["rows"]),
             "schema": persisted.schema.jsonValue(),
             "partition_rows": partition_rows,
             "partition_rows_kind": rows_kind,
@@ -135,13 +118,8 @@ class StageRunner:
             "complete": True,
         }
         if score_col is not None:
-            if metrics is not None:
-                hist = {b: int(metrics[f"b{b}"] or 0) for b in range(bins)}
-                manifest["score_histogram"] = {b: c for b, c in hist.items()
-                                               if c}
-            else:  # pragma: no cover
-                manifest["score_histogram"] = _score_histogram(persisted,
-                                                               score_col)
+            hist = {b: int(metrics[f"b{b}"] or 0) for b in range(bins)}
+            manifest["score_histogram"] = {b: c for b, c in hist.items() if c}
         if extra_manifest:
             manifest["extra"] = dict(extra_manifest)
         with open(self.manifest_path(stage), "w") as f:

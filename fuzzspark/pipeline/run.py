@@ -12,7 +12,7 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from fuzzspark.functions import scorer_column, sha256_column
 from fuzzspark.pipeline.blocking import block_keys, defuse_skew
@@ -120,16 +120,11 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # Observation counting recomputed-sha mismatches) instead of
         # paying a second full corpus scan per run — at 100 TB the old
         # re-scan was the same size as the write itself
-        try:
-            from pyspark.sql import Observation
-            obs = Observation("integrity_01_files")
-            df = df.observe(obs, F.sum(
-                (sha256_column("content") != F.col("content_sha256"))
-                .cast("long")).alias("sha_mismatch"))
-            integrity_obs.append(obs)
-        except ImportError:  # pragma: no cover — very old pyspark
-            pass
-        return df
+        obs = Observation("integrity_01_files")
+        integrity_obs.append(obs)
+        return df.observe(obs, F.sum(
+            (sha256_column("content") != F.col("content_sha256"))
+            .cast("long")).alias("sha_mismatch"))
 
     files_ck = runner.run("01_files", _files)
 

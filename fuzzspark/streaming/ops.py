@@ -7,7 +7,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from fuzzspark.functions import length_prefilter, scorer_column, sha256_column
+from fuzzspark.functions import (_with_score_not_null, length_prefilter,
+                                 sha256_column)
 from fuzzspark.pipeline.blocking import block_keys
 
 __all__ = ["streaming_exact_dedup", "streaming_fuzzy_match",
@@ -86,12 +87,9 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float,
                  .join(ref_content, "ref_id")
                  .where(length_prefilter(F.col("new_len"), F.col("ref_len"),
                                          scorer, threshold)))
-        scored = pairs.withColumn(
-            "score", scorer_column(scorer, "new_content", "ref_content",
-                                   "normalized_similarity",
-                                   score_cutoff=threshold))
-        return scored.where(F.col("score").isNotNull()) \
-                     .select("stream_id", "ref_id",
+        scored = _with_score_not_null(pairs, scorer, "new_content",
+                                      "ref_content", score_cutoff=threshold)
+        return scored.select("stream_id", "ref_id",
                              F.round("score", 6).alias("score"))
 
     def unpersist() -> None:

@@ -166,3 +166,88 @@ def test_vs_duckdb_oracle():
         if len(s1) == len(s2):
             ham = con.execute("SELECT hamming(?, ?)", [s1, s2]).fetchone()[0]
             assert mods["hamming"].distance(s1, s2) == ham
+
+
+# ------------------------------------- exact-duplicate shortcut parity
+
+EQUAL = ["", "a", "kitten", "Иванко", "a" * 80, "  ", "hello world",
+         "\U0001d11e x", "abc def ghi " * 12]
+MIXED = [("kitten", "sitting"), ("", "abc"), ("ab", "ba"), ("abc", "abd"),
+         (None, None), (None, "x"), ("x", None)]
+SCORER_KW = [
+    (s, {}) for s in ("levenshtein", "indel", "lcs_seq", "osa",
+                      "damerau_levenshtein", "hamming", "jaro",
+                      "jaro_winkler", "prefix", "postfix", "ratio",
+                      "partial_ratio", "token_sort_ratio",
+                      "token_set_ratio")
+] + [("hamming", {"pad": True}), ("levenshtein", {"weights": (1, 1, 2)}),
+     ("levenshtein", {"weights": (3, 2, 7)}),
+     ("jaro_winkler", {"prefix_weight": 0.2})]
+
+
+def _scalar(scorer, form, a, b, cutoff, kw):
+    """The scalar oracle, NaN for NULL / suppressed / hamming error."""
+    from fuzzspark.kernels import fuzz
+    from fuzzspark.kernels.metrics import HammingError
+    if a is None or b is None:
+        return math.nan
+    if scorer in ALL_METRICS:
+        try:
+            got = getattr(ALL_METRICS[scorer], form)(
+                a, b, score_cutoff=cutoff, **kw)
+        except HammingError:
+            got = None
+    else:  # composites: similarity-canonical with maximum 1
+        sim = getattr(fuzz, scorer)(a, b)
+        got = sim if form.endswith("similarity") else 1.0 - sim
+        if cutoff is not None and (got > cutoff if "distance" in form
+                                   else got < cutoff):
+            got = None
+    return math.nan if got is None else float(got)
+
+
+def _cutoffs(form):
+    if form == "normalized_similarity":
+        return [None, 0.5, 1.5]   # 1.5 suppresses even the equal pairs
+    if form == "similarity":
+        return [None, 2, 10_000]  # above every maximum: all suppressed
+    return [None, 0, 0.5]
+
+
+@pytest.mark.parametrize("form", FORMS)
+@pytest.mark.parametrize("scorer,kw", SCORER_KW,
+                         ids=[f"{s}{kw}" for s, kw in SCORER_KW])
+def test_exact_shortcut_matches_scalar(scorer, kw, form):
+    """Equal pairs skip the kernels in batch_scores but still go through
+    its normalization and cutoff: every scorer, form and cutoff must
+    equal the scalar oracle, NULL/NULL included (NaN)."""
+    pairs = [(s, s) for s in EQUAL] + MIXED
+    s1 = np.array([a for a, _ in pairs], dtype=object)
+    s2 = np.array([b for _, b in pairs], dtype=object)
+    for cutoff in _cutoffs(form):
+        got = batch_scores(scorer, form, s1, s2, score_cutoff=cutoff, **kw)
+        for (a, b), g in zip(pairs, got):
+            want = _scalar(scorer, form, a, b, cutoff, kw)
+            assert (math.isnan(g) and math.isnan(want)) \
+                or g == pytest.approx(want, abs=1e-12), (a, b, cutoff, g, want)
+
+
+def test_exact_pairs_skip_the_kernels(monkeypatch):
+    """The kernels never see an equal non-NULL pair, even in an
+    all-equal batch."""
+    from fuzzspark.kernels import batch
+    seen = []
+    raw_batch = batch._raw_batch
+
+    def spy(scorer, s1, s2, valid, **kw):
+        seen.extend((s1[i], s2[i]) for i in np.flatnonzero(valid))
+        return raw_batch(scorer, s1, s2, valid, **kw)
+
+    monkeypatch.setattr(batch, "_raw_batch", spy)
+    for pairs in ([(s, s) for s in EQUAL] + MIXED, [("a", "a")] * 3):
+        s1 = np.array([a for a, _ in pairs], dtype=object)
+        s2 = np.array([b for _, b in pairs], dtype=object)
+        out = batch_scores("ratio", "normalized_similarity", s1, s2)
+        assert all(out[k] == 1.0 for k, (a, b) in enumerate(pairs)
+                   if a is not None and a == b)
+    assert seen and all(a != b for a, b in seen)

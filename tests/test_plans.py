@@ -91,3 +91,84 @@ def test_blocking_join_is_hash_join(spark):
     plan = _plan(pairs)
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan \
         or "ShuffledHashJoin" in plan
+
+
+def _final_plan(df) -> str:
+    """Executed plan after a run; an AQE plan also prints its initial
+    plan, which is cut off here."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+@pytest.fixture(scope="module")
+def pair_file(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("pairs") / "pairs.parquet")
+    rows = [("same", "same"), ("kitten", "sitting"), ("", ""),
+            (None, "x"), (None, None), ("flaw", "lawn")]
+    spark.createDataFrame(rows, "s1: string, s2: string") \
+        .write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("keep_suppressed", [False, True])
+@pytest.mark.parametrize("cutoff", [None, "set"])
+@pytest.mark.parametrize("form", ["distance", "similarity",
+                                  "normalized_distance",
+                                  "normalized_similarity"])
+def test_score_pairs_one_scan_one_python_node(spark, pair_file, form,
+                                              cutoff, keep_suppressed):
+    """score_pairs reads its input once and scores it in exactly one
+    ArrowEvalPython node: no exact/UDF Union, and a cutoff's NOT NULL
+    filter does not drag a second copy of the UDF below the projection."""
+    from fuzzspark.functions import score_pairs
+    from fuzzspark.kernels import levenshtein
+    if cutoff is not None:
+        cutoff = 2.0 if form in ("distance", "similarity") else 0.5
+    out = score_pairs(spark.read.parquet(pair_file), "s1", "s2",
+                      scorer="levenshtein", form=form, score_cutoff=cutoff,
+                      keep_suppressed=keep_suppressed)
+    plan = _final_plan(out)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "Union" not in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    got = {(r["s1"], r["s2"]): r["score"] for r in out.collect()}
+    fn = getattr(levenshtein, form)
+    for (a, b), score in got.items():
+        if a is None or b is None:
+            assert score is None
+        else:
+            want = fn(a, b, score_cutoff=cutoff)
+            assert score == (None if want is None else pytest.approx(want))
+    if cutoff is None or keep_suppressed:
+        assert len(got) == 6
+    assert got[("same", "same")] == (4.0 if form == "similarity" else
+                                     1.0 if form == "normalized_similarity"
+                                     else 0.0)
+
+
+def test_fuzzy_topk_join_one_python_node(spark):
+    from fuzzspark.extras.search import fuzzy_topk_join
+    q = spark.createDataFrame([(1, "kitten"), (2, "same")], "id long, s string")
+    c = spark.createDataFrame([(10, "sitting"), (11, "same"),
+                               (12, "kitchen")], "id long, s string")
+    for cutoff in (None, 0.5):
+        out = fuzzy_topk_join(q, c, query_col="s", choice_col="s",
+                              query_id="id", choice_id="id",
+                              score_cutoff=cutoff)
+        assert _final_plan(out).count("ArrowEvalPython") == 1
+
+
+def test_streaming_matcher_one_python_node(spark):
+    from fuzzspark.pipeline import corpus_to_spark, generate_corpus
+    from fuzzspark.streaming.ops import _match_batch
+    corpus = generate_corpus(n_clusters=10, seed=5, threshold=0.9)
+    files, _, _ = corpus_to_spark(spark, corpus)
+    run = _match_batch(files.where(F.col("id") % 2 == 0), "ratio", 0.9,
+                       dict(use_exact=True, use_path=True, use_minhash=True))
+    try:
+        edges = run(files.where(F.col("id") % 2 == 1))
+        assert _final_plan(edges).count("ArrowEvalPython") == 1
+        assert edges.count() > 0
+    finally:
+        run.unpersist()

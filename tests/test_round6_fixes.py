@@ -3,8 +3,9 @@
 1. length_prefilter has NO valid bound for the composite scorers
    (ADVICE r5 high): partial_ratio / token_set_ratio / token_sort_ratio
    emit lit(True) — score_pairs must not drop perfect matches.
-2. score_pairs splits exact-duplicate rows off BEFORE the scorer UDF
-   (plan-level union, not a when() over the UDF column) (ADVICE r5).
+2. score_pairs scores exact-duplicate rows perfectly in ONE plan
+   branch: one ArrowEvalPython node, no Union; the shortcut that skips
+   the kernels lives inside the scorer batch.
 3. connected_components drops self-loops consistently in both the
    pre-contracted and plain paths (ADVICE r5).
 4. run_pipeline leaves the CC checkpoint dir in place when the caller
@@ -55,7 +56,7 @@ def test_length_prefilter_still_prunes_ratio(spark):
                                      "ratio", 0.9)).count() == 0
 
 
-# ------------------------------------------- score_pairs exact split
+# ------------------------------------------ score_pairs exact shortcut
 
 
 def test_score_pairs_exact_rows_bypass_udf_in_plan(spark):
@@ -66,10 +67,10 @@ def test_score_pairs_exact_rows_bypass_udf_in_plan(spark):
         "s1: string, s2: string")
     out = score_pairs(df, "s1", "s2", scorer="ratio", keep_suppressed=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # plan-level split: ONE ArrowEvalPython branch under a Union — the
-    # exact side never reaches the python worker
+    # one scan, one ArrowEvalPython node, no exact/UDF split: the exact
+    # rows skip the kernels inside the scorer batch instead
     assert plan.count("ArrowEvalPython") == 1
-    assert "Union" in plan
+    assert "Union" not in plan
     got = {(r["s1"], r["s2"]): r["score"] for r in out.collect()}
     assert got[("same", "same")] == pytest.approx(1.0)
     assert 0.0 < got[("kitten", "sitting")] < 1.0
